@@ -905,7 +905,8 @@ def duplicate_span_islands(df: DataFrame, text_col: str, id_col: str,
     pure CPU — the same two-pass choice suffix-array ExactSubstr
     implementations make.
 
-    Measured (scale_probe --wave5, 100k docs with half the corpus
+    Measured (the wave-5 probe in scale_probe.py up to commit
+    00f40f2, 100k docs with half the corpus
     exact replicas — the WORST case, where nearly every gram is
     duplicated): 6.3 s / 132 MB shuffle with the min/max dup-set
     aggregate (the count_distinct form measured 11.5 s / 308 MB —

@@ -219,7 +219,8 @@ def assign_cell(vec_col: str, centroids: list[list[float]]) -> Column:
     issued ~512 F.lit py4j calls per use, ~0.3-0.5 s of pure driver
     chatter per consumer (measured; the Lloyd's loop had the same
     defect, fixed via `_assign_cell_sql`)."""
-    v = f"transform(`{vec_col}`, x -> cast(x as double))"
+    quoted = vec_col.replace("`", "``")
+    v = f"transform(`{quoted}`, x -> cast(x as double))"
     n = (f"sqrt(aggregate(transform({v}, x -> x * x), 0.0D, "
          f"(acc, x) -> acc + x))")
     dots = ", ".join(

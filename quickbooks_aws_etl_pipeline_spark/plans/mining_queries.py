@@ -89,7 +89,8 @@ def _bfs_distances(spark: SparkSession, sf_dir: str,
 
     frontiers = [seeds]
     labeled = seeds
-    for rnd in range(3):
+    rounds = 3
+    for rnd in range(rounds):
         nxt = (edges.join(frontiers[-1],
                           edges["src"] == frontiers[-1]["node"])
                .select(F.col("dst").alias("node"))
@@ -100,7 +101,7 @@ def _bfs_distances(spark: SparkSession, sf_dir: str,
         # histogram); the LAST frontier feeds only the histogram —
         # skip its checkpoint so the closing count fuses instead of
         # paying one more materialization barrier (r15, guide §5)
-        if checkpoint and rnd < 2:
+        if checkpoint and rnd < rounds - 1:
             nxt = nxt.localCheckpoint(eager=False)
         frontiers.append(nxt)
         labeled = labeled.unionByName(nxt)
@@ -886,7 +887,8 @@ def _weighted_sssp(spark: SparkSession, sf_dir: str,
             .filter(F.col("s_suppkey") % 16 == 7)
             .select(F.col("s_suppkey").alias("node"),
                     F.lit(0).cast("bigint").alias("dist")))
-    for rnd in range(3):
+    rounds = 3
+    for rnd in range(rounds):
         msgs = (edges.join(dist, edges["u"] == dist["node"])
                 .select(F.col("v").alias("node"),
                         (F.col("dist") + F.col("w")).alias("dist")))
@@ -897,7 +899,7 @@ def _weighted_sssp(spark: SparkSession, sf_dir: str,
         # doubling; the LAST round feeds only the final top-10 select
         # — skip its checkpoint so the closing aggregate fuses
         # instead of paying one more materialization (r15, guide §5)
-        if checkpoint and rnd < 2:
+        if checkpoint and rnd < rounds - 1:
             dist = dist.localCheckpoint(eager=False)
     return (dist.filter(F.col("dist") > 0)
             .select(F.col("node").cast("bigint").alias("suppkey"),
@@ -1209,7 +1211,8 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
            .localCheckpoint(eager=True))
     alive = mut.select("u").distinct().localCheckpoint(eager=True)
     counts = [alive.agg(F.count(F.lit(1)).cast("bigint").alias("n"))]
-    for rnd in range(8):
+    rounds = 8
+    for rnd in range(rounds):
         au = alive.select(F.col("u"))
         av = alive.select(F.col("u").alias("v"))
         deg = (mut.join(au, "u", "left_semi")
@@ -1221,7 +1224,7 @@ def graph_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round feeds only its count — leave it inline so the final
         # job fuses the closing peel instead of paying one more
         # eager materialization (r15, guide §5)
-        if rnd < 7:
+        if rnd < rounds - 1:
             alive = alive.localCheckpoint(eager=True)
         counts.append(alive.agg(F.count(F.lit(1)).cast("bigint")
                                 .alias("n")))

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import json
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from quickbooks_aws_etl_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -27,7 +29,8 @@ SF_ORACLE = "/root/testdata/sf0.01"
 # keys the driver can actually turn red this round or recently could:
 #   * the ACTIVE sweep window (includes every key touched this round),
 #   * the PREVIOUS round's window (the keys rotated out — r14 verdict
-#     item 9: they must stay internally checked),
+#     item 9: they must stay internally checked), read from the key
+#     set of its driver artifact (``_PREVIOUS_WINDOW``),
 #   * the bench HEADLINE set (every key the driver times),
 #   * the next-round rotation head (keys added/changed mid-round).
 # Everything else in those batteries is deselected by default; the
@@ -51,14 +54,22 @@ _KEY_BATTERIES = {
 _PLAN_ONLY_BATTERIES = {"test_registry_wide_no_scale_killers",
                         "test_money_key_bit_identical_at_sf001"}
 
+# The round-14 sweep's driver rows: their key set is the round-14
+# window (pinned by tests/test_window_derivation.py).
+_PREVIOUS_WINDOW = os.path.join(_REPO, "CORRECTNESS_r14.json")
+
+_FAST_TIER_DESELECTED = pytest.StashKey[int]()
+
 
 def _fast_keys() -> tuple[set[str], set[str]]:
     import bench
-    from quickbooks_aws_etl_pipeline_spark.plans import (
-        _ACTIVE_WINDOW, _ROUND14_WINDOW, _ROUND16_ROTATION_HEAD)
-    plan_fast = (set(_ACTIVE_WINDOW) | set(_ROUND16_ROTATION_HEAD)
+    from quickbooks_aws_etl_pipeline_spark.plans import (_ACTIVE_WINDOW,
+                                                         _NEXT_HEAD)
+    plan_fast = (set(_ACTIVE_WINDOW) | set(_NEXT_HEAD)
                  | set(bench.HEADLINE))
-    return plan_fast | set(_ROUND14_WINDOW), plan_fast
+    with open(_PREVIOUS_WINDOW) as f:
+        previous = set(json.load(f))
+    return plan_fast | previous, plan_fast
 
 
 def pytest_configure(config):
@@ -88,6 +99,7 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = kept
+        config.stash[_FAST_TIER_DESELECTED] = len(dropped)
     # run the driver-critical batteries FIRST (stable sort keeps the
     # original order within each band): if the driver's verify budget
     # ever truncates the run again, the tail it loses is operator
@@ -96,6 +108,14 @@ def pytest_collection_modifyitems(config, items):
              "test_window_derivation.py": 2, "test_bench_contract.py": 2,
              "test_graph_encoding.py": 2, "test_plan_audit.py": 3}
     items.sort(key=lambda it: _BAND.get(it.fspath.basename, 4))
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = config.stash.get(_FAST_TIER_DESELECTED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"fast tier: {n} tests deselected; "
+            "SPARK_GRAFT_FULL_TESTS=1 runs them all")
 
 
 @pytest.fixture(scope="session")

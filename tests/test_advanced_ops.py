@@ -1756,3 +1756,25 @@ def test_spherical_kmeans_ignores_malformed_vectors(spark, sf_smoke):
     mixed = emb.unionByName(bad)
     assert (spherical_kmeans(mixed, "embedding", "vec_id", k=4, iters=2)
             == spherical_kmeans(emb, "embedding", "vec_id", k=4, iters=2))
+
+
+def test_assign_cell_quotes_backticks_in_column_name(spark, sf_smoke):
+    """A vector column whose name contains a backtick must be quoted
+    inside assign_cell's SQL string (a raw splice fails to parse) and
+    get the same cells as the same data under a plain name."""
+    from quickbooks_aws_etl_pipeline_spark.operators.similarity import (
+        assign_cell)
+    emb = (spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
+           .select("vec_id", "embedding"))
+    cents = [[float(x) for x in r["embedding"]]
+             for r in emb.orderBy("vec_id").limit(4).collect()]
+
+    def cells(df, col):
+        return [tuple(r) for r in
+                df.select("vec_id", assign_cell(col, cents).alias("cell"))
+                  .orderBy("vec_id").collect()]
+
+    plain = cells(emb, "embedding")
+    odd = cells(emb.withColumnRenamed("embedding", "emb`vec"), "emb`vec")
+    assert odd == plain
+    assert len({c for _, c in plain}) > 1

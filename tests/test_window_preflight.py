@@ -20,8 +20,8 @@ import pandas as pd
 import pytest
 
 from quickbooks_aws_etl_pipeline_spark.plans import (ORACLE, QUERIES,
-                                                     _ROUND15_WINDOW,
-                                                     _ROUND16_ROTATION_HEAD)
+                                                     _ACTIVE_WINDOW,
+                                                     _NEXT_HEAD)
 
 from .oracle_util import _canon, duckdb_run
 
@@ -51,8 +51,8 @@ def _assert_driver_grade(spark_df, sql: str, sf_dir: str, name: str):
 
 
 @pytest.mark.parametrize(
-    "name", _ROUND15_WINDOW + [k for k in _ROUND16_ROTATION_HEAD
-                               if k not in _ROUND15_WINDOW])
+    "name", _ACTIVE_WINDOW + [k for k in _NEXT_HEAD
+                              if k not in _ACTIVE_WINDOW])
 def test_window_key_matches_oracle_at_driver_scale(spark, sf_oracle, name):
     if name not in ORACLE:
         df = QUERIES[name](spark, sf_oracle)
